@@ -50,10 +50,10 @@ class EngineConfig:
     # Bloom prefilter sizing (bits per key / hash count) for url_seen.
     bloom_bits_per_key: int = 10
     bloom_num_hashes: int = 6
-    # Per-bucket bloom blob ceiling. num_host_buckets is only the FLOOR of
-    # the bucket count: the frontier doubles it (rebucketing seen+blooms,
-    # a new snapshot) whenever the running seen estimate would push a
-    # bucket's blob past this — at 10^10 seen keys a fixed 64-bucket
+    # Per-bucket filter blob ceiling (Bloom bits or cuckoo slots). num_host_buckets
+    # is only the FLOOR of the bucket count: the frontier doubles it (rebucketing
+    # seen+filters, a new snapshot) whenever the running seen estimate would push
+    # a bucket's blob past this — at 10^10 seen keys a fixed 64-bucket
     # layout would mean ~200 MB single-binary-cell blobs.
     bloom_max_blob_bytes: int = 16 << 20
     # Probe strategy switchover: while the whole filter set fits under
@@ -62,14 +62,6 @@ class EngineConfig:
     # cogrouped per-bucket probe takes over.
     bloom_broadcast_max_bytes: int = 1 << 30
     max_retry_attempts: int = 5  # reference src/warc_processor.py:45-46
-    # AQE materializes every exchange as its own job to re-plan at runtime.
-    # The frontier round's shuffles are fixed-shape and explicitly planned
-    # (manual broadcast hints, bucket partitioning, skew salting), so those
-    # extra jobs are pure driver latency (~40% of the per-round serial
-    # constant measured at sandbox scale). run() therefore disables AQE for
-    # the loop's queries by default and restores the session setting after;
-    # flip this on if the corpus join sizes are genuinely unknown.
-    frontier_aqe: bool = False
     politeness: PolitenessConfig = PolitenessConfig()
     adaptive: AdaptiveConfig = AdaptiveConfig()
 

@@ -9,7 +9,7 @@ corpus); the reference's HTTP stages map as in SURVEY §3.
 Per round (each step one declarative DataFrame op, shuffles noted):
 
   1. candidates  = frontier, first-wins deduped by surt        [shuffle: surt]
-  2. unseen      = Bloom-prefiltered exact anti-join vs seen   [shuffle: bucket; seen side pruned to Bloom-positive buckets]
+  2. unseen      = filter-prefiltered exact anti-join vs seen  [shuffle: bucket; seen side pruned to probe-positive buckets]
   3. tagged      = robots verdict + crawl_delay (broadcast join, cached)
   4. admitted/deferred = per-host politeness window, skew-salted [shuffle: host(+salt)]
   5. fetched/missing   = pages scan ⋈ broadcast(admitted)      [no shuffle of the corpus; copy-dedupe window over ~|admitted|]
@@ -17,7 +17,7 @@ Per round (each step one declarative DataFrame op, shuffles noted):
   7. failures   += missing (retry ≤ max_attempts, then permanent)
   8. frontier'   = deferred ∪ out-links of fetched (anti-joined next round) ∪ retryable failures
   9. url_seen   += admitted∖retryable (bucket-keyed, bucket-sorted);
-     blooms updated INCREMENTALLY from the round delta (O(delta), not O(seen))
+     filters updated INCREMENTALLY from the round delta (O(delta), not O(seen))
  10. atomic round commit (state.json) — kill anywhere before it and resume
      replays the round; after it, the round is durable.
 
@@ -28,6 +28,16 @@ stats/skew job, which fills the tagged cache) + the table writes. Every
 other metric piggybacks on a write via ``DataFrame.observe`` — no
 standalone count() jobs, because at a 10^10-row frontier each count is a
 full extra pass over the round's data.
+
+URL-seen filter form: ``seen_mode`` ('bloom' or 'cuckoo') resolves once
+to an ``operators/dedup.FilterForm`` record (table name, hash version,
+blob column, bit total, blob bytes per key, build/update/probe/delete
+operators). Init, resume-rebuild, round maintenance, rebucketing and
+retract each have ONE code path over that record; every filter write
+goes through ``dedup.write_filter`` (write, rebuild NULL-blob buckets
+from the exact url_seen table, stamp ``total_bits``), and
+``dedup.filter_unseen_pruned`` alone picks broadcast vs cogrouped
+probing from that stamp. Adding a form means adding a record.
 
 Scheduling-order contract (SURVEY §3 EP1 caveat): the reference's emitted
 order is thread-nondeterministic; the *scheduled* order is deterministic.
@@ -53,22 +63,14 @@ from pyspark.sql import types as T
 from crawler_spark.config import DEFAULT, EngineConfig
 from crawler_spark.functions.detector import confidence_rank, detect_udf
 from crawler_spark.functions.url import canonicalize_udf
-from crawler_spark.operators.bloom import (
-    BLOOM_HASH_VERSION,
-    bucket_of,
-    build_blooms,
+from crawler_spark.operators.bloom import bucket_of
+from crawler_spark.operators.dedup import (
+    FORMS,
+    filter_unseen_pruned,
+    first_wins,
     required_buckets,
-    update_blooms,
+    write_filter,
 )
-from crawler_spark.operators.cuckoo import (
-    CUCKOO_HASH_VERSION,
-    build_cuckoo,
-    delete_cuckoo,
-    probe_cuckoo,
-    probe_cuckoo_broadcast,
-    update_cuckoo,
-)
-from crawler_spark.operators.dedup import filter_unseen_pruned, first_wins
 from crawler_spark.operators.politeness import admit_per_host
 from crawler_spark.operators.robots import (
     budget_from_crawl_delay,
@@ -216,13 +218,11 @@ class FrontierCrawler:
         # per-fingerprint update instead of a rebuild. Either way the
         # exact url_seen table is the membership truth (probe maybe →
         # exact confirm), so the unseen set is identical across modes.
-        if seen_mode not in ("bloom", "cuckoo"):
+        # Each form keeps its blobs in its own snapshot table, so a store
+        # written in one mode fails fast when reopened in the other.
+        if seen_mode not in FORMS:
             raise ValueError(f"unknown seen_mode {seen_mode!r}")
-        self.seen_mode = seen_mode
-        # snapshot-table name for the filter blobs: kept distinct per
-        # form so a store written in one mode fails fast when reopened
-        # in the other (resume reads meta from the mode's own table)
-        self._ftable = "blooms" if seen_mode == "bloom" else "cuckoo"
+        self.form = FORMS[seen_mode]
         if robots is not None:
             need = "rules" if robots_mode == "rfc9309" else "disallow_prefixes"
             if need not in robots.columns:
@@ -258,7 +258,7 @@ class FrontierCrawler:
         self._last_max_host: int | None = None
         # Bucket layout scales with the seen table: cfg.num_host_buckets is
         # the floor; required_buckets doubles it as the running seen count
-        # grows so per-bucket bloom blobs stay ≤ cfg.bloom_max_blob_bytes.
+        # grows so per-bucket filter blobs stay ≤ cfg.bloom_max_blob_bytes.
         self._num_buckets = cfg.num_host_buckets
         self._seen_total = 0
         # Fetch side: a column-pruned view of the corpus, scanned per round
@@ -291,24 +291,15 @@ class FrontierCrawler:
 
         return replace(self.cfg, num_host_buckets=self._num_buckets)
 
-    def _bloom_meta(self, round_no: int) -> dict:
-        return {
-            "round": round_no,
-            "hash_version": (
-                BLOOM_HASH_VERSION if self.seen_mode == "bloom" else CUCKOO_HASH_VERSION
-            ),
-            "num_buckets": self._num_buckets,
-        }
-
-    def _filter_version(self) -> int:
-        return BLOOM_HASH_VERSION if self.seen_mode == "bloom" else CUCKOO_HASH_VERSION
-
-    def _build_filters(self, seen: DataFrame, headroom: int = 1) -> DataFrame:
-        """Per-bucket filter blobs from the exact seen table, in the
-        session's seen_mode form."""
-        if self.seen_mode == "cuckoo":
-            return build_cuckoo(seen, cfg=self._rcfg(), headroom=headroom)
-        return build_blooms(seen, cfg=self._rcfg(), headroom=headroom)
+    def _write_filter(self, filters: DataFrame, round_no: int) -> int:
+        """Every filter-table write: overflowed buckets are rebuilt from
+        the exact url_seen table, and the meta is stamped for resume and
+        for the next round's probe gate (dedup.write_filter)."""
+        return write_filter(
+            self.store, self.form, filters, self._rcfg(),
+            exact=lambda: self.store.read(self.spark, "url_seen"),
+            meta={"round": round_no},
+        )
 
     def _canonical_frontier(self, urls: DataFrame, depth_col, priority_col) -> DataFrame:
         """urls(url[, ...]) → frontier rows with canonical keys. When a
@@ -372,18 +363,16 @@ class FrontierCrawler:
         empty_seen = self.spark.createDataFrame([], SEEN_SCHEMA)
         self.store.write("frontier", frontier, meta={"round": 0})
         self.store.write("url_seen", empty_seen, meta={"round": 0})
-        self.store.write(
-            self._ftable, self._build_filters(empty_seen), meta=self._bloom_meta(0)
-        )
+        self._write_filter(self.form.build(empty_seen, cfg=self._rcfg()), 0)
         self.store.commit_state(
             {
                 "round": 0,
                 "num_buckets": self._num_buckets,
                 "seen_total": 0,
-                "seen_mode": self.seen_mode,
+                "seen_mode": self.form.mode,
                 "tables": {
                     t: self.store.current_version(t)
-                    for t in ("frontier", "url_seen", self._ftable)
+                    for t in ("frontier", "url_seen", self.form.table)
                 },
             }
         )
@@ -413,25 +402,23 @@ class FrontierCrawler:
         # a store written in the other seen_mode has no blobs under this
         # mode's table — fail fast instead of probing a missing table
         mode_written = state.get("seen_mode", "bloom")
-        if mode_written != self.seen_mode:
+        if mode_written != self.form.mode:
             raise ValueError(
                 f"store was written with seen_mode={mode_written!r}; "
-                f"resume with the same mode (got {self.seen_mode!r})"
+                f"resume with the same mode (got {self.form.mode!r})"
             )
         # Filter blobs from a different hash/slot scheme would yield
         # false NEGATIVES on probe (silent url_seen breakage) — rebuild
         # from the exact seen table on any stamp mismatch.
-        meta = self.store.meta(self._ftable)
-        if meta.get("hash_version") != self._filter_version() or (
+        meta = self.store.meta(self.form.table)
+        if meta.get("hash_version") != self.form.hash_version or (
             meta.get("num_buckets") not in (None, self._num_buckets)
         ):
             seen = self.store.read(self.spark, "url_seen")
-            self.store.write(
-                self._ftable,
-                self._build_filters(seen, headroom=4),
-                meta=self._bloom_meta(int(state["round"])),
+            self._write_filter(
+                self.form.build(seen, cfg=self._rcfg(), headroom=4), int(state["round"])
             )
-            state["tables"][self._ftable] = self.store.current_version(self._ftable)
+            state["tables"][self.form.table] = self.store.current_version(self.form.table)
             self.store.commit_state(state)
         return int(state["round"])
 
@@ -452,13 +439,13 @@ class FrontierCrawler:
         from the exact ``url_seen`` table, and retire their filter
         entries. This is where the two seen_mode forms differ at scale:
 
-        - ``cuckoo``: one O(1) fingerprint deletion per retracted key
-          (operators/cuckoo.delete_cuckoo) — O(|delta| + blob bytes)
-          total, the capability that justifies cuckoo's ~19 bytes/key
-          over the Bloom's 10 bits;
-        - ``bloom``: bits cannot be unset, so the affected buckets'
-          blobs are REBUILT from the exact table — O(bucket rows), not
-          O(delta).
+        - a form with a delete operator (``cuckoo``): one O(1)
+          fingerprint deletion per retracted key — O(|delta| + blob
+          bytes) total, the capability that justifies cuckoo's ~19
+          bytes/key over the Bloom's 10 bits;
+        - otherwise (``bloom``: bits cannot be unset) the affected
+          buckets' blobs are REBUILT from the exact table — O(bucket
+          rows), not O(delta).
 
         Either way correctness does not depend on the filter update: a
         stale maybe only costs an exact-confirm row, and the exact
@@ -480,7 +467,7 @@ class FrontierCrawler:
         # only keys actually present may be deleted from a cuckoo filter
         # (deleting a never-inserted fingerprint could evict a live
         # colliding key's occurrence — the standard cuckoo caveat); the
-        # same semi-join also gives bloom mode its affected-bucket list
+        # same semi-join also gives the rebuild its affected-bucket list
         present = seen.join(F.broadcast(keys), "surt", "left_semi").persist()
         n = present.count()
         if n == 0:
@@ -493,52 +480,34 @@ class FrontierCrawler:
             remaining.sortWithinPartitions("bucket"),
             meta={"round": rnd, "retracted": n},
         )
-        filters = store.read(spark, self._ftable)
-        if self.seen_mode == "cuckoo":
-            new_f = delete_cuckoo(filters, present.select("surt"), cfg=self._rcfg())
+        filters = store.read(spark, self.form.table)
+        rcfg = self._rcfg()
+        if self.form.delete is not None:
+            new_f = self.form.delete(filters, present.select("surt"), cfg=rcfg)
         else:
             buckets = [r[0] for r in present.select("bucket").distinct().collect()]
-            rebuilt = self._build_filters(
+            rebuilt = self.form.build(
                 store.read(spark, "url_seen").where(F.col("bucket").isin(buckets)),
+                cfg=rcfg,
                 headroom=4,
             )
             new_f = filters.where(~F.col("bucket").isin(buckets)).unionByName(rebuilt)
-        obs = Observation()
-        if self.seen_mode == "bloom":
-            new_f = new_f.observe(obs, F.sum("m").alias("bits"))
-        else:
-            # keep the broadcast-vs-cogroup probe gate's byte total fresh
-            # across retraction versions too (same piggyback as the
-            # round-loop write)
-            new_f = new_f.observe(
-                obs, F.sum(F.coalesce(F.size("slots"), F.lit(0))).alias("ints")
-            )
-        fv = store.write(self._ftable, new_f, meta=self._bloom_meta(rnd))
-        if self.seen_mode == "bloom":
-            store.amend_meta(
-                self._ftable, {"total_bits": int(obs.get["bits"] or 0)}, version=fv
-            )
-        else:
-            store.amend_meta(
-                self._ftable,
-                {"total_slot_bytes": int(obs.get["ints"] or 0) * 4},
-                version=fv,
-            )
+        self._write_filter(new_f, rnd)
         present.unpersist()
         # a fresh (un-resumed) crawler object tracks 0 — trust the state
         self._seen_total = max(
             0, int(state.get("seen_total", self._seen_total)) - n
         )
         state["seen_total"] = self._seen_total
-        state["seen_mode"] = self.seen_mode
+        state["seen_mode"] = self.form.mode
         state.setdefault("tables", {})
         state["tables"]["url_seen"] = store.current_version("url_seen")
-        state["tables"][self._ftable] = store.current_version(self._ftable)
+        state["tables"][self.form.table] = store.current_version(self.form.table)
         store.commit_state(state)
         return n
 
     # ------------------------------------------------------------ round --
-    def run_round(self, round_no: int, measure: bool = True) -> RoundMetrics:
+    def run_round(self, round_no: int) -> RoundMetrics:
         t0 = time.time()
         m = RoundMetrics(round=round_no)
         m.trace = {}
@@ -553,7 +522,7 @@ class FrontierCrawler:
 
         frontier = store.read(spark, "frontier")
         seen = store.read(spark, "url_seen")
-        filters = store.read(spark, self._ftable)
+        filters = store.read(spark, self.form.table)
 
         # 1. within-frontier dedupe: one candidate per surt. Order is fully
         #    deterministic: priority, then failure_count desc (a retrying
@@ -583,35 +552,14 @@ class FrontierCrawler:
         #    cuckoo slot-probe — same maybe/confirm contract, identical
         #    exact unseen set), exact confirm against probe-positive
         #    buckets only. The bucket-prune collect inside is the round's
-        #    first job; it fills the probed cache and fires obs_cand.
-        if self.seen_mode == "cuckoo":
-            # broadcast the slot tables while they fit on every executor;
-            # beyond that, the cogrouped per-bucket probe (no single place
-            # ever holds all blobs) — same size rule as the Bloom pair,
-            # fed by the byte total piggybacked on the previous round's
-            # filter write (fallback: one tiny B-row aggregate)
-            tb = store.meta(self._ftable).get("total_slot_bytes")
-            if tb is None:
-                tb = (
-                    filters.agg(
-                        F.sum(F.coalesce(F.size("slots"), F.lit(0)))
-                    ).first()[0]
-                    or 0
-                ) * 4
-            probe = (
-                probe_cuckoo_broadcast
-                if tb <= cfg.bloom_broadcast_max_bytes
-                else probe_cuckoo
-            )
-        else:
-            probe = None
+        #    first job; it fills the probed cache and fires obs_cand. The
+        #    broadcast-vs-cogroup gate reads the bit total stamped by the
+        #    previous filter write (a store without it costs one tiny
+        #    B-row aggregate).
         ur = filter_unseen_pruned(
             candidates, seen, filters, cfg=rcfg,
-            total_bits=(
-                store.meta(self._ftable).get("total_bits")
-                if self.seen_mode == "bloom" else None
-            ),
-            probe=probe,
+            total_bits=store.meta(self.form.table).get("total_bits"),
+            form=self.form,
         )
         _tr("prune_probe")
         unseen = ur.unseen
@@ -787,106 +735,23 @@ class FrontierCrawler:
         store.write("frontier", next_frontier, meta={"round": round_no})
         _tr("w_frontier")
 
-        def _w_seen_and_blooms() -> None:
+        def _w_seen_and_filter() -> None:
             seen_version = store.write(
                 "url_seen", newly_seen, meta={"round": round_no}, append=True
             )
-            # filter maintenance: fold in ONLY this round's delta; overflow
-            # detection and the next round's broadcast-size hint both ride
-            # the write's Observation — the common path is ONE job, no
-            # standalone collect. Buckets that would overflow their target
-            # FP rate / load factor are rebuilt from the exact table
-            # (amortized-rare: fresh buckets carry 4× headroom).
+            # filter maintenance: fold in ONLY this round's delta — the
+            # common path is ONE job. Buckets that would overflow their
+            # target FP rate / load factor come out NULL and are rebuilt
+            # from the exact table inside _write_filter (amortized-rare:
+            # fresh buckets carry 4× headroom).
             delta = store.read_delta(spark, "url_seen", seen_version)
-            if self.seen_mode == "cuckoo":
-                obs_ck = Observation()
-                new_f = update_cuckoo(filters, delta, cfg=rcfg).observe(
-                    obs_ck,
-                    F.sum(
-                        F.when(F.col("slots").isNull(), 1).otherwise(0)
-                    ).alias("overflow"),
-                    F.sum(F.coalesce(F.size("slots"), F.lit(0))).alias("ints"),
-                )
-                fv = store.write(self._ftable, new_f, meta=self._bloom_meta(round_no))
-                vals = obs_ck.get
-                if int(vals["overflow"] or 0):
-                    written = store.read(spark, self._ftable)
-                    overflow = [
-                        r[0]
-                        for r in written.where(F.col("slots").isNull())
-                        .select("bucket")
-                        .collect()
-                    ]
-                    rebuilt = build_cuckoo(
-                        store.read(spark, "url_seen").where(
-                            F.col("bucket").isin(overflow)
-                        ),
-                        cfg=rcfg,
-                        headroom=4,
-                    )
-                    obs_rb = Observation()
-                    final = (
-                        written.where(~F.col("bucket").isin(overflow))
-                        .unionByName(rebuilt)
-                        .observe(
-                            obs_rb,
-                            F.sum(F.coalesce(F.size("slots"), F.lit(0))).alias("ints"),
-                        )
-                    )
-                    fv = store.write(self._ftable, final, meta=self._bloom_meta(round_no))
-                    store.amend_meta(
-                        self._ftable,
-                        {"total_slot_bytes": int(obs_rb.get["ints"] or 0) * 4},
-                        version=fv,
-                    )
-                else:
-                    store.amend_meta(
-                        self._ftable,
-                        {"total_slot_bytes": int(vals["ints"] or 0) * 4},
-                        version=fv,
-                    )
-                return
-            obs_bloom = Observation()
-            new_blooms = update_blooms(filters, delta, cfg=rcfg).observe(
-                obs_bloom,
-                F.sum("m").alias("bits"),
-                F.sum(F.when(F.col("bits").isNull(), 1).otherwise(0)).alias("overflow"),
-            )
-            bv = store.write("blooms", new_blooms, meta=self._bloom_meta(round_no))
-            vals = obs_bloom.get
-            if int(vals["overflow"] or 0):
-                written = store.read(spark, "blooms")
-                overflow = [
-                    r[0]
-                    for r in written.where(F.col("bits").isNull())
-                    .select("bucket")
-                    .collect()
-                ]
-                rebuilt = build_blooms(
-                    store.read(spark, "url_seen").where(F.col("bucket").isin(overflow)),
-                    cfg=rcfg,
-                    headroom=4,
-                )
-                obs_rb = Observation()
-                final = (
-                    written.where(~F.col("bucket").isin(overflow))
-                    .unionByName(rebuilt)
-                    .observe(obs_rb, F.sum("m").alias("bits"))
-                )
-                bv = store.write("blooms", final, meta=self._bloom_meta(round_no))
-                store.amend_meta(
-                    "blooms", {"total_bits": int(obs_rb.get["bits"] or 0)}, version=bv
-                )
-            else:
-                store.amend_meta(
-                    "blooms", {"total_bits": int(vals["bits"] or 0)}, version=bv
-                )
+            self._write_filter(self.form.update(filters, delta, cfg=rcfg), round_no)
 
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(3) as pool:
             futs = [
-                pool.submit(_w_seen_and_blooms),
+                pool.submit(_w_seen_and_filter),
                 pool.submit(
                     store.write, "results", results, {"round": round_no}, None, True
                 ),
@@ -929,12 +794,12 @@ class FrontierCrawler:
         )
 
         # Bucket-layout maintenance: double the bucket count whenever the
-        # running seen total would push a bloom blob past the byte ceiling,
-        # rewriting seen (new bucket column, bucket-sorted) and rebuilding
-        # blooms as new snapshot versions. Geometric growth → amortized
-        # O(1) rewrites per key, like a vector resize.
+        # running seen total would push a filter blob past the byte
+        # ceiling, rewriting seen (new bucket column, bucket-sorted) and
+        # rebuilding the filters as new snapshot versions. Geometric
+        # growth → amortized O(1) rewrites per key, like a vector resize.
         self._seen_total += int(obs_seen.get["n"] or 0)
-        need_b = required_buckets(self._seen_total, cfg)
+        need_b = required_buckets(self._seen_total, cfg, self.form)
         if need_b > self._num_buckets:
             self._num_buckets = need_b
             rcfg2 = self._rcfg()
@@ -946,10 +811,9 @@ class FrontierCrawler:
             store.write(
                 "url_seen", rebucketed, meta={"round": round_no, "rebucketed_to": need_b}
             )
-            store.write(
-                self._ftable,
-                self._build_filters(store.read(spark, "url_seen"), headroom=4),
-                meta=self._bloom_meta(round_no),
+            self._write_filter(
+                self.form.build(store.read(spark, "url_seen"), cfg=rcfg2, headroom=4),
+                round_no,
             )
 
         if self.adaptive:
@@ -967,11 +831,11 @@ class FrontierCrawler:
                 "rate": self._rate,
                 "num_buckets": self._num_buckets,
                 "seen_total": self._seen_total,
-                "seen_mode": self.seen_mode,
+                "seen_mode": self.form.mode,
                 "tables": {
                     t: self.store.current_version(t)
                     for t in (
-                        "frontier", "url_seen", self._ftable,
+                        "frontier", "url_seen", self.form.table,
                         "results", "failures", "metrics",
                     )
                 },
@@ -996,10 +860,15 @@ class FrontierCrawler:
         start = (from_round if from_round is not None else self.resume()) + 1
         out: list[RoundMetrics] = []
         prev_next: int | None = None
+        # AQE materializes every exchange as its own job to re-plan at
+        # runtime. The round's shuffles are fixed-shape and explicitly
+        # planned (manual broadcast hints, bucket partitioning, skew
+        # salting), so those extra jobs are pure scheduling latency (~40% of
+        # the per-round serial constant measured at sandbox scale): the
+        # loop runs with AQE off and restores the session setting after.
         aqe_key = "spark.sql.adaptive.enabled"
         prev_aqe = self.spark.conf.get(aqe_key, "true")
-        if not self.cfg.frontier_aqe:
-            self.spark.conf.set(aqe_key, "false")
+        self.spark.conf.set(aqe_key, "false")
         try:
             for r in range(start, start + max_rounds):
                 if prev_next == 0:

@@ -55,19 +55,6 @@ def _words_to_bytes(cell) -> np.ndarray:
     return np.ascontiguousarray(np.asarray(cell, dtype="<i8")).view(np.uint8)
 
 
-def required_buckets(total_keys: int, cfg: EngineConfig = DEFAULT, headroom: int = 4) -> int:
-    """Smallest power-of-two multiple of cfg.num_host_buckets that keeps
-    the expected per-bucket bloom blob under cfg.bloom_max_blob_bytes at
-    ``total_keys`` (with the incremental-update headroom factor). The
-    frontier rebuckets seen+blooms when this outgrows the current count —
-    growth is geometric, so rebuild cost amortizes like a vector resize."""
-    bytes_per_key = cfg.bloom_bits_per_key * headroom / 8
-    b = max(1, cfg.num_host_buckets)
-    while total_keys * bytes_per_key / b > cfg.bloom_max_blob_bytes:
-        b *= 2
-    return b
-
-
 def _hash_cols(df: DataFrame, key_col: str, num_buckets: int) -> DataFrame:
     return df.withColumns(
         {
@@ -260,21 +247,6 @@ def probe_blooms_broadcast(
         out = out.withColumnRenamed("_bucket", bucket_out)
         keep.append(bucket_out)
     return out.select(*keep)
-
-
-def merge_blooms(
-    old_keys: DataFrame, new_keys: DataFrame, key_col: str = "surt", cfg: EngineConfig = DEFAULT
-) -> DataFrame:
-    """Blooms covering old ∪ new keys.
-
-    Rebuilt from raw keys rather than OR-ing blobs because per-bucket m
-    grows with the key count (constant false-positive rate); a production
-    variant would OR in place while m is unchanged and rebuild only
-    overflowing buckets (per-bucket n is stored for exactly that check).
-    """
-    return build_blooms(
-        old_keys.select(key_col).unionByName(new_keys.select(key_col)), key_col, cfg
-    )
 
 
 def probe_blooms(

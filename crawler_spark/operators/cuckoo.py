@@ -45,6 +45,8 @@ round's candidates.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -89,6 +91,12 @@ def _nb_for(n: int, headroom: int) -> int:
     while nb < need:
         nb *= 2
     return nb
+
+
+def table_bytes(n: float, headroom: int) -> int:
+    """Serialized slot-table bytes of a bucket built for ``n`` keys at
+    ``headroom`` (nb cuckoo buckets × 4 int32 slots)."""
+    return _nb_for(math.ceil(n), headroom) * SLOTS_PER_BUCKET * 4
 
 
 def _bulk_place(slots: np.ndarray, occ: np.ndarray, idx: np.ndarray, fp: np.ndarray) -> np.ndarray:
@@ -385,27 +393,6 @@ def probe_cuckoo(
         probed = probed.withColumnRenamed("_bucket", bucket_out)
         keep.append(bucket_out)
     return probed.select(*keep)
-
-
-def filter_unseen_cuckoo(
-    candidates: DataFrame,
-    seen: DataFrame,
-    filters: DataFrame,
-    key_col: str = "surt",
-    cfg: EngineConfig = DEFAULT,
-) -> DataFrame:
-    """Rows of ``candidates`` whose key is NOT in ``seen`` — exactly,
-    cuckoo-accelerated (the twin of dedup.filter_unseen): probe-negative
-    rows are provably unseen and skip the anti-join; probe-positive rows
-    are confirmed exactly, so fingerprint collisions never drop a URL
-    and a delete can never resurrect one (the exact table is the
-    truth)."""
-    cand = candidates.where(F.col(key_col).isNotNull())
-    probed = probe_cuckoo_broadcast(cand, filters, key_col, cfg)
-    definitely_new = probed.where(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = probed.where(F.col("_maybe_seen")).drop("_maybe_seen")
-    confirmed_new = maybe.join(seen.select(key_col), key_col, "left_anti")
-    return definitely_new.unionByName(confirmed_new)
 
 
 def contains_numpy(nb: int, slots, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:

@@ -29,9 +29,12 @@ Exactly-once design (per-batch work bounded, NOT O(total emitted)):
   commit can never duplicate output rows;
 - cross-batch dedupe state is a compact (warc_source, url, bucket) key
   table + per-bucket Bloom sidecars in a SnapshotStore next to the
-  output. Batch results are Bloom-probed JVM-side (broadcast, bounded
-  blob bytes); definitely-new rows skip the seen table entirely, and
-  only Bloom-positive rows run the exact confirm anti-join, against just
+  output, maintained by the frontier's filter-write path
+  (``dedup.write_filter``: a bucket that outgrows its headroom is
+  rebuilt from the seen keys instead of staying all-maybe). Batch
+  results are Bloom-probed JVM-side (broadcast, bounded blob bytes);
+  definitely-new rows skip the seen table entirely, and only
+  Bloom-positive rows run the exact confirm anti-join, against just
   their buckets (partition-pruned). The previous design re-read and
   distinct-ed the ENTIRE output per micro-batch — O(total emitted
   so far) work per batch, forever growing; this one reads O(bloom
@@ -63,11 +66,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from crawler_spark.config import DEFAULT, EngineConfig
-from crawler_spark.operators.bloom import (
-    BLOOM_SCHEMA,
-    probe_blooms_broadcast,
-    update_blooms,
-)
+from crawler_spark.operators.bloom import BLOOM_SCHEMA, probe_blooms_broadcast
+from crawler_spark.operators.dedup import BLOOM, write_filter
 from crawler_spark.plans.flagship import classify_bulk
 from crawler_spark.sources.corpus import PAGES_SCHEMA
 from crawler_spark.sources.tables import SnapshotStore
@@ -200,8 +200,14 @@ def stream_classify(
             if store.exists("blooms")
             else spark.createDataFrame([], BLOOM_SCHEMA)
         )
-        blooms_v = store.write(
-            "blooms", update_blooms(prev_blooms, new_keys, key_col="_k", cfg=cfg)
+        # a bucket past its headroom comes out NULL (all-maybe) and is
+        # rebuilt from the exact seen keys, so later batches keep skipping
+        # the confirm join for it
+        blooms_v = write_filter(
+            store, BLOOM,
+            BLOOM.update(prev_blooms, new_keys, key_col="_k", cfg=cfg), cfg,
+            exact=lambda: store.read(spark, "seen").withColumn("_k", _key_col()),
+            key_col="_k",
         )
         history = state.get("history", [])
         history.append(

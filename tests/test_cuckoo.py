@@ -11,10 +11,10 @@ from crawler_spark.operators.cuckoo import (
     build_cuckoo,
     contains_numpy,
     delete_cuckoo,
-    filter_unseen_cuckoo,
     probe_cuckoo_broadcast,
     update_cuckoo,
 )
+from crawler_spark.operators.dedup import CUCKOO, filter_unseen
 
 CFG = EngineConfig(num_host_buckets=8)
 
@@ -142,7 +142,10 @@ def test_filter_unseen_exactness(spark, seen, filters):
     """probe + exact confirm == plain anti-join, bit-exactly — the
     filter is an accelerator, never the truth."""
     cand = _keys(spark, 4000, 11_000)  # 1000 seen + 6000 new
-    got = {r["surt"] for r in filter_unseen_cuckoo(cand, seen, filters, cfg=CFG).collect()}
+    got = {
+        r["surt"]
+        for r in filter_unseen(cand, seen, filters, cfg=CFG, form=CUCKOO).collect()
+    }
     want = {r["surt"] for r in cand.join(seen, "surt", "left_anti").collect()}
     assert got == want
     assert len(want) == 6000
@@ -165,7 +168,7 @@ def test_crawl_retraction_flow(spark):
     seen = crawl1.join(failed, "surt", "left_anti").cache()
     # crawl 2 discovers: overlap with seen, the failed set, fresh URLs
     cand = _keys(spark, 2000, 4000)
-    got = {r["surt"] for r in filter_unseen_cuckoo(cand, seen, f, cfg=CFG).collect()}
+    got = {r["surt"] for r in filter_unseen(cand, seen, f, cfg=CFG, form=CUCKOO).collect()}
     want = {r["surt"] for r in cand.join(seen, "surt", "left_anti").collect()}
     assert got == want
     # fold crawl 2's admissions in incrementally and verify no false
@@ -185,20 +188,17 @@ def test_crawl_retraction_flow(spark):
 @pytest.mark.spark
 def test_pruned_unseen_stage_bloom_cuckoo_equivalence(spark, seen, filters):
     """The frontier's bucket-pruned unseen stage is filter-structure
-    agnostic: swapping the cuckoo probe in via probe= yields the
-    IDENTICAL exact unseen set as the Bloom pair — correctness lives in
-    the confirm join, the filter only prices it."""
+    agnostic: the cuckoo form (form=CUCKOO) yields the IDENTICAL exact
+    unseen set as the Bloom form — correctness lives in the confirm
+    join, the filter only prices it."""
     from crawler_spark.operators.bloom import bucket_of, build_blooms
-    from crawler_spark.operators.cuckoo import probe_cuckoo_broadcast
     from crawler_spark.operators.dedup import filter_unseen_pruned
 
     seen_b = seen.withColumn("bucket", bucket_of("surt", CFG))
     cand = _keys(spark, 4500, 9000)
     blooms = build_blooms(seen, cfg=CFG)
     r_bloom = filter_unseen_pruned(cand, seen_b, blooms, cfg=CFG)
-    r_cuckoo = filter_unseen_pruned(
-        cand, seen_b, filters, cfg=CFG, probe=probe_cuckoo_broadcast
-    )
+    r_cuckoo = filter_unseen_pruned(cand, seen_b, filters, cfg=CFG, form=CUCKOO)
     got_b = {r["surt"] for r in r_bloom.unseen.collect()}
     got_c = {r["surt"] for r in r_cuckoo.unseen.collect()}
     want = {r["surt"] for r in cand.join(seen, "surt", "left_anti").collect()}

@@ -8,10 +8,13 @@ from pyspark.sql import functions as F
 from crawler_spark.config import EngineConfig
 from crawler_spark.operators.bloom import build_blooms, probe_blooms
 from crawler_spark.operators.dedup import (
+    BLOOM,
+    CUCKOO,
     dedupe_domain_first_wins,
     filter_unseen,
     first_wins,
     merge_runs,
+    required_buckets,
 )
 
 CFG = EngineConfig(num_host_buckets=8)
@@ -124,46 +127,45 @@ def test_broadcast_probe_matches_cogroup_probe(spark):
     blooms.unpersist()
 
 
-def test_required_buckets_keeps_blobs_bounded():
-    """Pure math: the derived bucket count caps expected per-bucket blob
-    bytes at cfg.bloom_max_blob_bytes for any seen-count, growing as
-    power-of-two multiples of the configured floor."""
-    from crawler_spark.config import EngineConfig
-    from crawler_spark.operators.bloom import required_buckets
-
+@pytest.mark.parametrize("form", [BLOOM, CUCKOO], ids=lambda f: f.mode)
+def test_required_buckets_keeps_blobs_bounded(form):
+    """Pure math: the derived bucket count caps the expected per-bucket
+    blob bytes of the form at cfg.bloom_max_blob_bytes for any
+    seen-count, growing as power-of-two multiples of the configured
+    floor."""
     cfg = EngineConfig(num_host_buckets=64, bloom_max_blob_bytes=16 << 20)
-    bytes_per_key = cfg.bloom_bits_per_key * 4 / 8
     prev = 0
     for total in (0, 10**4, 10**6, 10**8, 10**10, 10**12):
-        b = required_buckets(total, cfg)
-        assert total * bytes_per_key / b <= cfg.bloom_max_blob_bytes
+        b = required_buckets(total, cfg, form)
+        assert form.blob_bytes(total / b, 4, cfg) <= cfg.bloom_max_blob_bytes
         assert b % cfg.num_host_buckets == 0 and (b // cfg.num_host_buckets) & (
             (b // cfg.num_host_buckets) - 1
         ) == 0  # floor × power of two
         assert b >= prev
         prev = b
     # sanity at the north-rule scale: 10^10 keys stay ≤ 16 MB per blob
-    assert 10**10 * bytes_per_key / required_buckets(10**10, cfg) <= 16 << 20
+    assert form.blob_bytes(10**10 / required_buckets(10**10, cfg, form), 4, cfg) <= 16 << 20
 
 
 @pytest.mark.spark
-def test_built_blob_sizes_bounded_across_simulated_growth(spark):
-    """Actually build blooms at growing key counts with the derived bucket
-    count and measure the serialized blobs: every blob stays under the
-    ceiling (with hash-imbalance slack), across a growth that forces two
-    bucket doublings."""
+@pytest.mark.parametrize("form", [BLOOM, CUCKOO], ids=lambda f: f.mode)
+def test_built_blob_sizes_bounded_across_simulated_growth(spark, form):
+    """Actually build the form's filters at growing key counts with the
+    derived bucket count and measure the serialized blobs: every blob
+    stays under the ceiling (with hash-imbalance slack), across a growth
+    that forces two bucket doublings."""
     from dataclasses import replace
-
-    from crawler_spark.config import EngineConfig
-    from crawler_spark.operators.bloom import build_blooms, required_buckets
 
     cfg = EngineConfig(num_host_buckets=4, bloom_max_blob_bytes=4096)
     for n in (200, 2000, 8000):
-        b = required_buckets(n, cfg)
+        b = required_buckets(n, cfg, form)
         keys = spark.range(n).select(
             F.concat(F.lit("com,ex)/k/"), F.col("id")).alias("surt")
         )
-        blobs = build_blooms(keys, cfg=replace(cfg, num_host_buckets=b), headroom=4).collect()
-        max_blob = max(8 * len(r["bits"]) for r in blobs)
+        built = form.build(keys, cfg=replace(cfg, num_host_buckets=b), headroom=4)
+        max_blob = max(
+            r["bits"] // 8
+            for r in built.groupBy("bucket").agg(form.total_bits().alias("bits")).collect()
+        )
         assert max_blob <= cfg.bloom_max_blob_bytes * 1.5, (n, b, max_blob)
-    assert required_buckets(8000, cfg) > required_buckets(200, cfg)
+    assert required_buckets(8000, cfg, form) > required_buckets(200, cfg, form)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from crawler_spark.config import EngineConfig, PolitenessConfig
 from crawler_spark.frontier import FrontierCrawler
 from crawler_spark.operators.cuckoo import probe_cuckoo_broadcast
+from crawler_spark.operators.dedup import FORMS
 from crawler_spark.sources.corpus import (
     generate_links,
     generate_pages,
@@ -198,23 +199,24 @@ def test_cogrouped_probe_matches_broadcast(spark):
 
 
 @pytest.mark.spark
-def test_cuckoo_cogrouped_loop_matches_broadcast_loop(spark, corpus, tmp_path):
+@pytest.mark.parametrize("seen_mode", ["bloom", "cuckoo"])
+def test_cogrouped_loop_matches_broadcast_loop(spark, corpus, tmp_path, seen_mode):
     """Force the beyond-broadcast probe path inside the loop (tiny
     broadcast byte cap) — the crawl must be bit-identical to the
-    broadcast-path crawl."""
+    broadcast-path crawl, in either filter form."""
     from dataclasses import replace
 
     pages, links, seeds, robots = corpus
     small = replace(CFG, bloom_broadcast_max_bytes=64)  # force cogroup
-    store = SnapshotStore(str(tmp_path / "cuckoo_cogroup"))
+    store = SnapshotStore(str(tmp_path / f"{seen_mode}_cogroup"))
     crawler = FrontierCrawler(
         spark, store, pages, links=links, robots=robots, cfg=small,
-        budget=BUDGET, seen_mode="cuckoo",
+        budget=BUDGET, seen_mode=seen_mode,
     )
     crawler.init_from_seeds(seeds)
     metrics = crawler.run(ROUNDS, from_round=0)
     ref_store, ref_crawler, ref_metrics = _crawl(
-        spark, corpus, tmp_path, "cuckoo_bc_ref", "cuckoo"
+        spark, corpus, tmp_path, f"{seen_mode}_bc_ref", seen_mode
     )
     got = {(r["surt"], r["round"]) for r in store.read(spark, "url_seen").collect()}
     exp = {
@@ -226,6 +228,66 @@ def test_cuckoo_cogrouped_loop_matches_broadcast_loop(spark, corpus, tmp_path):
     ]
     crawler.close()
     ref_crawler.close()
+
+
+class _CountingStore(SnapshotStore):
+    """SnapshotStore that counts writes per table."""
+
+    def __init__(self, root):
+        super().__init__(root)
+        self.writes: dict[str, int] = {}
+
+    def write(self, table, df, meta=None, partition_by=None, append=False):
+        self.writes[table] = self.writes.get(table, 0) + 1
+        return super().write(table, df, meta, partition_by, append)
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("seen_mode", ["bloom", "cuckoo"])
+def test_round_overflow_rebuilds_filter(spark, corpus, tmp_path, seen_mode):
+    """A round whose admissions outgrow a bucket's headroom rebuilds that
+    bucket from the exact table inside the round (two filter writes).
+    After every round no NULL blob survives, the stamped total_bits
+    equals the table's aggregate, and the filter has no false negative."""
+    form = FORMS[seen_mode]
+    pages, links, seeds, robots = corpus
+    one_bucket = EngineConfig(
+        num_host_buckets=1, skew_threshold=200, skew_salts=4, max_retry_attempts=3,
+    )
+    store = _CountingStore(str(tmp_path / f"{seen_mode}_overflow"))
+    crawler = FrontierCrawler(
+        spark, store, pages, robots=robots, cfg=one_bucket, budget=1000,
+        seen_mode=seen_mode,
+    )
+
+    def check_filter():
+        f = store.read(spark, form.table)
+        assert f.where(F.col(form.blob_col).isNull()).count() == 0
+        agg = f.agg(form.total_bits()).first()[0] or 0
+        assert store.meta(form.table)["total_bits"] == agg
+        seen = store.read(spark, "url_seen")
+        probed = form.probe_broadcast(seen, f, "surt", crawler._rcfg())
+        assert probed.where(~F.col("_maybe_seen")).count() == 0
+
+    # round 1 admits two seeds: the filter bucket is sized for ~2 keys
+    crawler.init_from_seeds(seeds.orderBy("seed_id").limit(2))
+    store.writes.clear()
+    m1 = crawler.run_round(1)
+    assert m1.admitted == 2 and store.writes[form.table] == 1
+    check_filter()
+
+    # round 2 admits every page: far past the bucket's 4× headroom
+    store.write(
+        "frontier",
+        crawler._canonical_frontier(pages.select("url").distinct(), F.lit(1), F.lit(0.0)),
+        meta={"round": 1},
+    )
+    store.writes.clear()
+    m2 = crawler.run_round(2)
+    assert m2.admitted > 100
+    assert store.writes[form.table] == 2, "overflowed bucket was not rebuilt"
+    check_filter()
+    crawler.close()
 
 
 @pytest.mark.spark

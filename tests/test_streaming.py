@@ -255,3 +255,37 @@ def test_stream_outlinks_dedupes_within_watermark(spark, tmp_path):
         "https://h.com/a/own1.html",
         "https://h.com/own2.html",    # ../ resolved
     }
+
+
+@pytest.mark.spark
+def test_overflowing_bloom_bucket_rebuilt_between_batches(spark, tmp_path):
+    """A later batch that outgrows a Bloom bucket's headroom rebuilds
+    that bucket from the seen keys: no NULL (all-maybe) bits survive any
+    commit, and the output still equals the batch flagship run —
+    re-arriving pages included."""
+    from crawler_spark.config import EngineConfig
+    from crawler_spark.sources.tables import SnapshotStore
+
+    cfg = EngineConfig(num_host_buckets=2)
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    pages = generate_pages(spark, 1200, partitions=2).cache()
+    store = SnapshotStore(out + "_state")
+    waves = [
+        F.col("warc_offset") < 60,  # small first batch: small blooms
+        F.col("warc_offset") >= 60,  # ~20× more keys per bucket
+        F.col("warc_offset") < 300,  # re-arrivals: all confirmed away
+    ]
+    for i, wave in enumerate(waves):
+        pages.where(wave).write.parquet(f"{src}/wave={i}")
+        stream_classify(spark, f"{src}/wave=*", out, ckpt, cfg=cfg).awaitTermination(300)
+        assert store.read(spark, "blooms").where(F.col("bits").isNull()).count() == 0
+    assert len(store.versions("blooms")) > len(waves), "no bucket overflowed"
+
+    got = spark.read.parquet(out)
+    assert got.count() == got.select("warc_source", "url").distinct().count()
+    expect = {
+        (r["warc_source"], r["url"], r["confidence"])
+        for r in classify_bulk(pages, min_confidence="medium").collect()
+    }
+    assert {(r["warc_source"], r["url"], r["confidence"]) for r in got.collect()} == expect
+    pages.unpersist()

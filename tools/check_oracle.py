@@ -4,7 +4,7 @@ Runs every ``__spark_entry__.queries()`` entry on Spark at the given SF
 and the matching ``oracle_sql()`` in DuckDB over the same parquet, then
 compares row count, column-name set, and order-insensitive values.
 
-Usage: python tools/verify_entry.py [sf_dir] [query ...]
+Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
